@@ -1,6 +1,6 @@
 from navigator_data_ingest_spark.functions.text import (
     slugify_col,
-    valid_http_url,
+    source_url_ok,
     watermark_text_col,
 )
 from navigator_data_ingest_spark.functions.content import (
@@ -22,7 +22,7 @@ from navigator_data_ingest_spark.functions.vectors import (
 
 __all__ = [
     "slugify_col",
-    "valid_http_url",
+    "source_url_ok",
     "watermark_text_col",
     "detect_content_type",
     "upload_file_name",

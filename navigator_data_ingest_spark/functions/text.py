@@ -122,9 +122,11 @@ def slugify_sql(col: str) -> str:
     return f"regexp_replace({s}, '^-+|-+$', '', 'g')"
 
 
-def valid_http_url(url: Column) -> Column:
-    """Boolean: is this a plausible AnyHttpUrl (http/https, non-empty host)."""
-    return url.isNotNull() & url.rlike(_HTTP_URL_RE)
+def source_url_ok(url: Column) -> Column:
+    """Boolean: a null source_url, or a plausible AnyHttpUrl (http/https,
+    non-empty host). A document without a source_url is valid; any other
+    value fails validation (new_document_actions.py:79)."""
+    return url.isNull() | url.rlike(_HTTP_URL_RE)
 
 
 def watermark_text_col(url: Column, date: Column) -> Column:

@@ -9,6 +9,13 @@ this plans everything as DataFrames and writes three datasets:
     {out}/archive_plan/     (src_path, dst_path) rename plan parquet
     {out}/report/           the per-(type, error) batch summary JSON
 
+The outputs are unordered datasets. The ingest rules live in
+``operators/ingest.py``, the same functions the ``ingest_*`` registry
+queries wrap; this module only reads, writes and counts. Each output is
+computed once, by its write: its row count is an observed metric of that
+write (``DataFrame.observe``), not a second pass. The CLI prints the
+counts as ``{'parser_input': n, 'archive_plan': n, 'report': n}``.
+
 Run:
     python -m navigator_data_ingest_spark.main \
         --updates-file new_and_updated_documents.json --output-dir /tmp/out
@@ -19,11 +26,12 @@ from __future__ import annotations
 import argparse
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from navigator_data_ingest_spark.functions.text import valid_http_url
 from navigator_data_ingest_spark.operators.ingest import (
+    build_parser_input,
+    build_report,
     expand_archive_paths,
     map_update_actions,
     order_update_actions,
@@ -34,68 +42,31 @@ from navigator_data_ingest_spark.sources.pipeline_updates import (
 from navigator_data_ingest_spark.sources.sinks import write_parser_input, write_report
 
 
-def build_parser_input(new_docs: DataFrame) -> DataFrame:
-    """BackendDocument rows -> initial ParserInput records.
-
-    Direct field translations (new_document_actions.py:88-95); rows with
-    an invalid non-null source_url are excluded here and surface as
-    ValueError rows in the report instead of raising per-document.
-    """
-    ok = F.col("source_url").isNull() | valid_http_url(F.col("source_url"))
-    return new_docs.where(ok).select(
-        F.col("import_id").alias("document_id"),
-        F.col("slug").alias("document_slug"),
-        F.col("name").alias("document_name"),
-        F.col("description").alias("document_description"),
-        F.col("source_url").alias("document_source_url"),
-        F.col("type").alias("document_type"),
-        F.col("geography").alias("document_geography"),
-        F.lit(None).cast("string").alias("document_cdn_object"),
-        F.lit(None).cast("string").alias("document_content_type"),
-        F.lit(None).cast("string").alias("document_md5_sum"),
-    )
+def _write_counted(df: DataFrame, write, path: str) -> int:
+    """``write(df, path)``; returns the row count that write observed."""
+    obs = Observation()
+    write(df.observe(obs, F.count(F.lit(1)).alias("rows")), path)
+    return obs.get["rows"]
 
 
-def build_report(new_docs: DataFrame, updates: DataFrame) -> DataFrame:
-    """IngestResult rollup (main.py:186-232): counts per (type, error)."""
-    url_ok = F.col("source_url").isNull() | valid_http_url(F.col("source_url"))
-    new_side = new_docs.select(
-        F.lit("new").alias("ingest_type"),
-        F.when(~url_ok, F.lit("ValueError")).alias("error"),
-    )
-    upd_side = (
-        updates.select("document_id")
-        .distinct()
-        .select(
-            F.lit("updated").alias("ingest_type"),
-            F.lit(None).cast("string").alias("error"),
-        )
-    )
-    return (
-        new_side.unionAll(upd_side)
-        .groupBy("ingest_type", "error")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
+def _write_parquet(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").parquet(path)
 
 
 def run_batch(spark: SparkSession, updates_file: str, output_dir: str) -> dict:
     """Execute one ingest batch; returns row counts per output."""
     new_docs, updates = read_pipeline_updates(spark, updates_file)
-    parser_input = build_parser_input(new_docs)
-    archive_plan = expand_archive_paths(
-        order_update_actions(map_update_actions(updates))
-    )
-    report = build_report(new_docs, updates)
-
-    write_parser_input(parser_input, os.path.join(output_dir, "parser_input"))
-    archive_plan.write.mode("overwrite").parquet(
-        os.path.join(output_dir, "archive_plan")
-    )
-    write_report(report, os.path.join(output_dir, "report"))
+    outputs = {
+        "parser_input": (build_parser_input(new_docs), write_parser_input),
+        "archive_plan": (
+            expand_archive_paths(order_update_actions(map_update_actions(updates))),
+            _write_parquet,
+        ),
+        "report": (build_report(new_docs, updates), write_report),
+    }
     return {
-        "parser_input": parser_input.count(),
-        "archive_plan": archive_plan.count(),
-        "report": report.count(),
+        name: _write_counted(df, write, os.path.join(output_dir, name))
+        for name, (df, write) in outputs.items()
     }
 
 

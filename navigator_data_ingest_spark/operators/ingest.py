@@ -30,7 +30,7 @@ from navigator_data_ingest_spark.functions.content import (
 )
 from navigator_data_ingest_spark.functions.text import (
     slugify_col,
-    valid_http_url,
+    source_url_ok,
     watermark_text_col,
 )
 from navigator_data_ingest_spark.sources.tables import load_table, scatter
@@ -251,9 +251,7 @@ def ingest_validate_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     return nd.select(
         "import_id",
         "source_url",
-        F.when(F.col("source_url").isNull(), F.lit(True))
-        .otherwise(valid_http_url(F.col("source_url")))
-        .alias("url_ok"),
+        source_url_ok(F.col("source_url")).alias("url_ok"),
     ).orderBy("import_id")
 
 
@@ -381,35 +379,37 @@ def ingest_watermark_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ingest_parser_input(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Initial ParserInput projection (new_document_actions.py:88-95).
+def build_parser_input(new_docs: DataFrame) -> DataFrame:
+    """BackendDocument rows -> initial ParserInput records.
 
-    Rows with an invalid (non-http) source_url error out in the
-    reference; here they are excluded (they surface in the results
-    report instead). A null source_url is allowed and stays null.
+    Direct field translations (new_document_actions.py:88-95). Rows with
+    an invalid (non-http) source_url error out in the reference; here
+    they are excluded and surface as ValueError rows in the report
+    instead. A null source_url is allowed and stays null.
     """
+    return new_docs.where(source_url_ok(F.col("source_url"))).select(
+        F.col("import_id").alias("document_id"),
+        F.col("slug").alias("document_slug"),
+        F.col("name").alias("document_name"),
+        F.col("description").alias("document_description"),
+        F.col("source_url").alias("document_source_url"),
+        F.col("type").alias("document_type"),
+        F.col("geography").alias("document_geography"),
+        F.lit(None).cast("string").alias("document_cdn_object"),
+        F.lit(None).cast("string").alias("document_content_type"),
+        F.lit(None).cast("string").alias("document_md5_sum"),
+    )
+
+
+def ingest_parser_input(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Initial ParserInput projection over the synthetic new documents,
+    whose backend document type comes from their category."""
     nd = synthetic_new_documents(spark, sf_dir)
-    ok = F.col("source_url").isNull() | valid_http_url(F.col("source_url"))
     doc_type = None
     for c, t in CATEGORY_DOC_TYPE.items():
         cond = F.col("category") == c
         doc_type = F.when(cond, F.lit(t)) if doc_type is None else doc_type.when(cond, F.lit(t))
-    return (
-        nd.where(ok)
-        .select(
-            F.col("import_id").alias("document_id"),
-            F.col("slug").alias("document_slug"),
-            F.col("name").alias("document_name"),
-            F.col("description").alias("document_description"),
-            F.col("source_url").alias("document_source_url"),
-            doc_type.alias("document_type"),
-            F.col("geography").alias("document_geography"),
-            F.lit(None).cast("string").alias("document_cdn_object"),
-            F.lit(None).cast("string").alias("document_content_type"),
-            F.lit(None).cast("string").alias("document_md5_sum"),
-        )
-        .orderBy("document_id")
-    )
+    return build_parser_input(nd.withColumn("type", doc_type)).orderBy("document_id")
 
 
 def map_update_actions(upd: DataFrame) -> DataFrame:
@@ -427,19 +427,17 @@ def ingest_update_actions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def order_update_actions(acts: DataFrame, ordered: bool = True) -> DataFrame:
+def order_update_actions(acts: DataFrame) -> DataFrame:
     """Per-document action ordering (updated_document_actions.py:65).
 
     If any action is `parse`, only the FIRST parse action runs. Else all
     actions run, stable-ordered with `update_dont_parse` last. Expressed
     with window functions over (document_id) — no driver loop.
 
-    ``ordered=False`` skips the presentation sort for compositions whose
-    next operator (an aggregation or join) destroys row order anyway: an
-    inherited ``orderBy`` is a full range exchange + global sort + the
-    range partitioner's sampling job, all wasted (guide §2.4 — remove
-    shuffles outright; Catalyst's EliminateSorts does not fire through
-    the Window/Generate operators stacked above it here).
+    The output is unordered: ``exec_order`` carries the per-document
+    order, and a presentation ``orderBy`` (a range exchange, a global
+    sort and the range partitioner's sampling job) is left to callers
+    that present rows, such as the registry wrapper below.
     """
     from pyspark.sql import Window
 
@@ -450,7 +448,7 @@ def order_update_actions(acts: DataFrame, ordered: bool = True) -> DataFrame:
     ).over(w)
     priority = F.when(F.col("action") == "update_dont_parse", 1).otherwise(0)
     w_order = Window.partitionBy("document_id").orderBy(priority.asc(), F.col("seq").asc())
-    out = (
+    return (
         acts.withColumn("has_parse", has_parse)
         .withColumn("first_parse_seq", first_parse_seq)
         .withColumn("rn", F.row_number().over(w_order))
@@ -464,26 +462,12 @@ def order_update_actions(acts: DataFrame, ordered: bool = True) -> DataFrame:
         )
         .select("document_id", "exec_order", "update_type", "action")
     )
-    return out.orderBy("document_id", "exec_order") if ordered else out
-
-
-def _order_actions_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unordered action ordering over the raw (unsorted) update actions.
-
-    Row-identical to ingest_order_actions — the window logic imposes its
-    own per-partition sort, so neither the input's nor the output's
-    presentation orderBy affects the rows — but the plan carries two
-    fewer range exchanges. Compositions consume this; the registry key
-    keeps the declared ordered output.
-    """
-    return order_update_actions(
-        map_update_actions(synthetic_updates(spark, sf_dir)), ordered=False
-    )
 
 
 def ingest_order_actions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry wrapper: ordering over the synthetic updates."""
-    return _order_actions_raw(spark, sf_dir).orderBy("document_id", "exec_order")
+    acts = map_update_actions(synthetic_updates(spark, sf_dir))
+    return order_update_actions(acts).orderBy("document_id", "exec_order")
 
 
 # archive-path expansion rules per action (updated_document_actions.py):
@@ -497,7 +481,7 @@ SUFFIXES = ["json", "npy"]
 VARIANTS = ["", "_translated_en"]
 
 
-def expand_archive_paths(ordered: DataFrame, sort_output: bool = True) -> DataFrame:
+def expand_archive_paths(ordered: DataFrame) -> DataFrame:
     """Archive/rename plans for ordered actions (updated_document_actions.py).
 
     The reference performs one S3 rename at a time; here the (action ×
@@ -505,7 +489,7 @@ def expand_archive_paths(ordered: DataFrame, sort_output: bool = True) -> DataFr
     rename-plan table a distributed mover can execute in bulk. The plan
     is a superset of actual renames: the reference only renames objects
     that EXIST (e.g. parser_input never has an .npy) — existence is the
-    mover's concern, not the planner's.
+    mover's concern, not the planner's. The rows are unordered.
     """
     acts = ordered.where(
         F.col("action").isin("parse", "reparse", "update_dont_parse")
@@ -532,23 +516,21 @@ def expand_archive_paths(ordered: DataFrame, sort_output: bool = True) -> DataFr
         F.lit("archive/"), F.col("prefix"), F.lit("/"), F.col("document_id"),
         F.lit("/"), F.lit(ARCHIVE_TS), F.lit("."), F.col("suffix"),
     )
-    out = expanded.select(
+    return expanded.select(
         "document_id", "action", "prefix", "suffix", "variant",
         src.alias("src_path"), dst.alias("dst_path"),
     )
-    if sort_output:
-        out = out.orderBy("document_id", "action", "prefix", "suffix", "variant")
-    return out
 
 
 def ingest_archive_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry wrapper: archive plans over the synthetic updates."""
-    return expand_archive_paths(_order_actions_raw(spark, sf_dir))
+    acts = map_update_actions(synthetic_updates(spark, sf_dir))
+    return expand_archive_paths(order_update_actions(acts)).orderBy(
+        "document_id", "action", "prefix", "suffix", "variant"
+    )
 
 
-def ingest_field_update(
-    spark: SparkSession, sf_dir: str, sort_output: bool = True
-) -> DataFrame:
+def field_updates(ordered: DataFrame) -> DataFrame:
     """update_file_field as a join (updated_document_actions.py:342).
 
     The reference reads each JSON object, compares the current value to
@@ -556,9 +538,10 @@ def ingest_field_update(
     a table op: cache-state ⋈ updates on (document_id, field), emitting
     the new value plus a mismatch flag. Only update types that carry a
     field mapping (name/description/metadata/slug via update_dont_parse /
-    update_field_in_all_occurences paths) participate.
+    update_field_in_all_occurences paths) participate. The rows are
+    unordered.
     """
-    upd = _order_actions_raw(spark, sf_dir).where(
+    upd = ordered.where(
         F.col("action").isin("update_dont_parse", "update_field_in_all_occurences")
     )
     field = None
@@ -581,15 +564,45 @@ def ingest_field_update(
     current = F.concat(F.lit("cur-"), F.col("update_type"), F.lit("-"), doc_num_s)
     s3_value = F.when(doc_num % 5 == 0, F.concat(F.lit("stale-"), F.col("update_type"))).otherwise(current)
     new_value = F.concat(F.lit("new-"), F.col("update_type"), F.lit("-"), doc_num_s)
-    out = upd.select(
+    return upd.select(
         "document_id", "prefix", "pipeline_field",
         current.alias("old_value"),
         new_value.alias("new_value"),
         (current != s3_value).alias("value_mismatch"),
     )
-    if sort_output:
-        out = out.orderBy("document_id", "prefix", "pipeline_field")
-    return out
+
+
+def ingest_field_update(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Registry wrapper: field updates over the synthetic updates."""
+    acts = map_update_actions(synthetic_updates(spark, sf_dir))
+    return field_updates(order_update_actions(acts)).orderBy(
+        "document_id", "prefix", "pipeline_field"
+    )
+
+
+def build_report(new_docs: DataFrame, updates: DataFrame) -> DataFrame:
+    """IngestResult rollup (main.py:186-232): counts per (type, error).
+
+    New documents with an invalid source_url are ValueErrors; every
+    updated document counts once, without error.
+    """
+    new_side = new_docs.select(
+        F.lit("new").alias("ingest_type"),
+        F.when(~source_url_ok(F.col("source_url")), F.lit("ValueError")).alias("error"),
+    )
+    upd_side = (
+        updates.select("document_id")
+        .distinct()
+        .select(
+            F.lit("updated").alias("ingest_type"),
+            F.lit(None).cast("string").alias("error"),
+        )
+    )
+    return (
+        new_side.unionAll(upd_side)
+        .groupBy("ingest_type", "error")
+        .agg(F.count(F.lit(1)).alias("n_docs"))
+    )
 
 
 def ingest_results_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -606,7 +619,7 @@ def ingest_results_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     supported = ct.isin(
         CONTENT_TYPE_PDF, CONTENT_TYPE_HTML, CONTENT_TYPE_DOCX, CONTENT_TYPE_DOC
     )
-    url_ok = F.col("source_url").isNull() | valid_http_url(F.col("source_url"))
+    url_ok = source_url_ok(F.col("source_url"))
     new_results = nd.select(
         F.lit("new").alias("ingest_type"),
         F.when(~url_ok, F.lit("ValueError"))
@@ -644,7 +657,7 @@ def ingest_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     nd = synthetic_new_documents(spark, sf_dir)
     chosen = F.coalesce(F.col("download_url"), F.col("source_url"))
     ct = detect_content_type(F.col("head_hex"), F.col("source_url"), F.col("header"))
-    url_ok = F.col("source_url").isNull() | valid_http_url(F.col("source_url"))
+    url_ok = source_url_ok(F.col("source_url"))
     supported = ct.isin(
         CONTENT_TYPE_PDF, CONTENT_TYPE_HTML, CONTENT_TYPE_DOCX, CONTENT_TYPE_DOC
     )
@@ -664,11 +677,9 @@ def ingest_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ct.alias("content_type"),
         F.lit(0).cast("bigint").alias("n_renames"),
     )
-    # unordered expansion: the groupBy destroys row order, so the
-    # declared operator's presentation sorts (two range exchanges + the
-    # range partitioner's sampling jobs) would be pure waste here
+    acts = map_update_actions(synthetic_updates(spark, sf_dir))
     renames = (
-        expand_archive_paths(_order_actions_raw(spark, sf_dir), sort_output=False)
+        expand_archive_paths(order_update_actions(acts))
         .groupBy("document_id")
         .agg(F.count(F.lit(1)).alias("n_renames"))
     )
@@ -738,7 +749,8 @@ def ingest_cache_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("value"),
         )
     )
-    changes = ingest_field_update(spark, sf_dir, sort_output=False).select(
+    acts = map_update_actions(synthetic_updates(spark, sf_dir))
+    changes = field_updates(order_update_actions(acts)).select(
         "document_id", "prefix", "pipeline_field", "new_value"
     )
     return (
